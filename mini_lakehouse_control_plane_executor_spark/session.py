@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 from mini_lakehouse_control_plane_executor_spark.vendor import ensure_protobuf
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``$SPARK_GRAFT_DRIVER_MEM`` is unset: a quarter
+    of physical RAM, between 1 GiB and 48 GiB. In local mode the driver
+    heap is also the executors' memory, and a fixed 48g on a small host
+    lets the JVM grow past what the host can give it."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / (1 << 30)
+    return f"{max(1, min(48, int(phys_gib // 4)))}g"
+
+
 def get_spark(
     app_name: str = "mini_lakehouse_control_plane_executor_spark",
     cpus: int | None = None,
@@ -57,7 +66,10 @@ def get_spark(
         # in the table layer, and the modern ecosystem default anyway.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # RocksDB state store: required by transformWithStateInPandas

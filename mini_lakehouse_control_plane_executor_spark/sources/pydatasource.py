@@ -293,12 +293,13 @@ class _MinilakeReader(DataSourceReader):
     def read(self, partition: _FilePartition):
         import os
 
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         pa_types = _pa_types()
         fields = self._schema_fields
-        deleted: set[int] = set()
+        deleted = np.empty(0, dtype=np.int64)
         if partition.dv_path:
             import pyarrow.compute as pc
 
@@ -309,7 +310,7 @@ class _MinilakeReader(DataSourceReader):
             mask = pc.equal(
                 dvt.column("src"), os.path.basename(partition.path)
             )
-            deleted = set(dvt.filter(mask).column("pos").to_pylist())
+            deleted = dvt.filter(mask).column("pos").to_numpy()
         offset = 0
         pf = pq.ParquetFile(os.path.join(self._table_dir, partition.path))
         present = [f.name for f in fields if f.name in pf.schema_arrow.names]
@@ -323,12 +324,12 @@ class _MinilakeReader(DataSourceReader):
                 for f in fields
             ]
             out = pa.RecordBatch.from_arrays(arrays, [f.name for f in fields])
-            if deleted:
-                keep = [
-                    i for i in range(out.num_rows) if offset + i not in deleted
-                ]
-                if len(keep) < out.num_rows:
-                    out = out.take(pa.array(keep, type=pa.int64()))
+            if deleted.size:
+                keep = ~np.isin(
+                    np.arange(offset, offset + out.num_rows), deleted
+                )
+                if not keep.all():
+                    out = out.filter(pa.array(keep))
             offset += batch.num_rows
             yield out
 

@@ -83,6 +83,56 @@ RESULT_PREVIEW_ROWS = 100
 MAX_FINISHED_JOBS = 200
 
 
+def _result_parts(path: str) -> list[str]:
+    """The result sink's part files in name order — the order of the
+    partitions that wrote them, so an ordered result reads back ordered."""
+    return [
+        os.path.join(path, n)
+        for n in sorted(os.listdir(path))
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+
+
+def _result_row_count(path: str) -> int:
+    """Exact result row count from the part files' parquet footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows for p in _result_parts(path))
+
+
+def _result_rows(path: str, schema, limit: int | None = None) -> list[dict]:
+    """The first ``limit`` (default: all) result rows as dicts, read on
+    the driver with Arrow — no Spark job. Rows go through PySpark's own
+    Arrow-to-Row converter against the query's Spark schema, so values
+    have the types ``DataFrame.collect()`` gives (timestamps local and
+    naive, binary as bytearray, structs as nested dicts)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    batches: list = []
+    n = 0
+    for part in _result_parts(path):
+        if limit is not None and n >= limit:
+            break
+        for batch in pq.ParquetFile(part).iter_batches(
+            batch_size=limit or 65536, columns=names
+        ):
+            batches.append(batch)
+            n += batch.num_rows
+            if limit is not None and n >= limit:
+                break
+    if not batches:
+        return []
+    tbl = pa.Table.from_batches(batches).cast(to_arrow_schema(schema))
+    if limit is not None:
+        tbl = tbl.slice(0, limit)
+    rows = ArrowTableToRowsConversion.convert(tbl, schema, binary_as_bytes=False)
+    return [r.asDict(recursive=True) for r in rows]
+
+
 class LakehouseSession:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -589,17 +639,19 @@ class LakehouseSession:
             info.metrics.update(self._planned_scan_metrics(q))
             df = self.query(q)
             # File-backed result sink: rows go to parquet at executor
-            # parallelism and NEVER materialize on the driver; only a
-            # bounded preview is collected.
+            # parallelism and NEVER materialize on the driver. The write
+            # is the query's only Spark action: the row count comes from
+            # the part files' footers and the bounded preview from an
+            # Arrow read of the first part files, both on the driver.
             result_path = os.path.join(self.root, "results", job_id)
             df.write.mode("overwrite").parquet(result_path)
-            result = self.spark.read.parquet(result_path)
-            preview = result.limit(RESULT_PREVIEW_ROWS).collect()
             info.extra["result_path"] = result_path
-            info.extra["preview"] = [r.asDict(recursive=True) for r in preview]
-            info.extra["schema"] = [f.name for f in df.schema.fields]
-            # Parquet footer count — metadata-only, no data scan.
-            info.metrics["output_rows"] = result.count()
+            info.extra["preview"] = _result_rows(
+                result_path, df.schema, RESULT_PREVIEW_ROWS
+            )
+            info.extra["schema"] = df.schema.fieldNames()
+            info.extra["spark_schema"] = df.schema
+            info.metrics["output_rows"] = _result_row_count(result_path)
             tracker = sc.statusTracker()
             spark_jobs = tracker.getJobIdsForGroup(job_id) or []
             num_tasks = 0
@@ -780,14 +832,11 @@ class LakehouseSession:
         """Block until the async job finishes; load its rows from the
         file-backed result sink (GET /queries/{id}/results). Full-result
         materialization happens HERE, at the caller's explicit request —
-        the job runner itself never holds more than the preview."""
+        the job runner itself never holds more than the preview. The
+        part files are read on the driver with Arrow, in partition
+        order, so this launches no Spark job."""
         info = self.job_wait(job_id, timeout_s)
-        path = info.extra["result_path"]
-        cols = info.extra["schema"]
-        return [
-            r.asDict(recursive=True)
-            for r in self.spark.read.parquet(path).select(*cols).collect()
-        ]
+        return _result_rows(info.extra["result_path"], info.extra["spark_schema"])
 
     def cancel_job(self, job_id: str) -> bool:
         """Best-effort async-job cancel, the reference's ``CancelQuery``

@@ -1655,13 +1655,15 @@ class LakehouseTable:
         self, files: list[FileAdd], schema, with_positions: bool = False
     ) -> DataFrame:
         """Scan a file list with deletion vectors APPLIED: plain files
-        read directly; dv-carrying files read with parquet row indexes
-        (``_metadata.row_index``) and anti-joined against their deleted
-        positions. The dv side broadcasts — it is bounded by
-        deleted-but-not-yet-materialized rows, and compaction exists
-        precisely to keep that bounded (at larger dv volumes the
-        per-file bitmap application in sources/pydatasource.py is the
-        shape to scale, as Delta's DV readers do).
+        read directly; dv-carrying files read with their basename
+        (``_metadata.file_name``, the key ``_dv_rows`` stores as ``src``)
+        and parquet row index (``_metadata.row_index``) and anti-joined
+        against their deleted positions. The file name is a per-file
+        constant the reader fills in, so the key costs no per-row string
+        work. The dv side broadcasts while it stays under
+        DV_BROADCAST_MAX_ROWS — it is bounded by deleted-but-not-yet-
+        materialized rows, and compaction exists precisely to keep that
+        bounded — and runs as a shuffled join above it.
 
         ``with_positions=True`` returns ``(df, src_col, pos_col)``: the
         frame keeps a file-basename column and a row-index column on
@@ -1690,8 +1692,7 @@ class LakehouseTable:
             )
             if need_meta:
                 df = df.withColumn(
-                    src_col,
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+                    src_col, F.col("_metadata.file_name")
                 ).withColumn(pos_col, F.col("_metadata.row_index"))
             return df
 

@@ -30,10 +30,18 @@ import subprocess
 import sys
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SCALE_OUT", "/root/repo/.scale/sf1")
-CORES = [
-    c.strip()
-    for c in os.environ.get("SPARK_GRAFT_SCALE_CORES", "32,8").split(",")
-]
+
+
+def parse_cores(spec: str) -> list[str]:
+    """``SPARK_GRAFT_SCALE_CORES`` as a list of at least two core counts;
+    anything else is a usage error (a paired table needs two runs)."""
+    cores = [c.strip() for c in spec.split(",") if c.strip()]
+    if len(cores) < 2 or not all(c.isdigit() and int(c) > 0 for c in cores):
+        raise SystemExit(
+            f"SPARK_GRAFT_SCALE_CORES={spec!r}: need at least two positive "
+            'core counts, comma-separated (e.g. "32,8")'
+        )
+    return cores
 
 
 def run_bench(cores: str) -> dict:
@@ -55,8 +63,9 @@ def run_bench(cores: str) -> dict:
 
 
 def main() -> None:
-    results = {c: run_bench(c) for c in CORES}
-    base, other = CORES[0], CORES[1] if len(CORES) > 1 else CORES[0]
+    cores = parse_cores(os.environ.get("SPARK_GRAFT_SCALE_CORES", "32,8"))
+    results = {c: run_bench(c) for c in cores}
+    base, other = cores[0], cores[1]
     qb, qo = results[base]["queries"], results[other]["queries"]
     print(f"# paired bench at {SF_DIR}: {base} vs {other} cores")
     print(f"| query | {base}c s | {other}c s | ratio ({other}c/{base}c) |")
@@ -67,7 +76,7 @@ def main() -> None:
         print(f"| {q} | {qb[q]:.3f} | {qo.get(q, float('nan')):.3f} | {r:.2f}x |")
     tb, to = results[base]["value"], results[other]["value"]
     print(f"| **total** | **{tb:.3f}** | **{to:.3f}** | **{to / tb:.2f}x** |")
-    for c in CORES:
+    for c in cores:
         with open(f".scale_cores_{c}.json", "w") as f:
             json.dump(results[c], f)
 

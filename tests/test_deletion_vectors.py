@@ -195,6 +195,64 @@ def test_clone_carries_dv(lake, spark):
     assert c.read().filter(F.col("k") < 25).count() == 0
 
 
+def _dv_read_paths_agree(lake, spark, t, want: list[int]) -> None:
+    """The snapshot read and the minilake data source both see exactly
+    the ``want`` keys."""
+    from mini_lakehouse_control_plane_executor_spark.sources.pydatasource import register
+
+    register(spark)
+    assert sorted(r.k for r in t.read().collect()) == want
+    src = (
+        spark.read.format("minilake")
+        .option("root", lake.root)
+        .option("table", t.name)
+        .load()
+    )
+    assert sorted(r.k for r in src.collect()) == want
+
+
+def test_dv_on_shallow_clone_absolute_paths(lake, spark):
+    """Merge-on-read DML on a shallow clone, whose FileAdds carry
+    ABSOLUTE paths into the source table, keys its dv entries by the
+    same file basename the scan reads; the source stays untouched."""
+    t = _mk(lake, spark)
+    t.delete("k < 10", mode="mor")
+    c = lake.clone_table("t", "c")
+    assert all(os.path.isabs(f.path) for f in c.snapshot().files)
+    v, n = c.delete("k % 4 = 0", mode="mor")
+    assert n == 22 and v is not None
+    _, n = c.update("k % 4 = 1", {"x": "x + 1"}, mode="mor")
+    assert n == 22
+    want = [k for k in range(10, 100) if k % 4]
+    _dv_read_paths_agree(lake, spark, c, want)
+    assert c.read().filter("k % 4 = 1 AND x <> k * 1.5 + 1").count() == 0
+    assert sorted(r.k for r in t.read().collect()) == list(range(10, 100))
+    assert c.compact(txn_id="compact-clone") is not None
+    assert not any(f.dv_path for f in c.snapshot().files)
+    assert sorted(r.k for r in c.read().collect()) == want
+
+
+def test_dv_under_table_root_with_space(spark, tmp_path):
+    """A table root whose path contains a space (URL-encoded as %20 in
+    Spark's file paths) still matches every dv entry to its file."""
+    from mini_lakehouse_control_plane_executor_spark.table.catalog import LakehouseSession
+
+    lake = LakehouseSession(spark, str(tmp_path / "my lake"))
+    t = _mk(lake, spark)
+    assert " " in t.dir
+    v0 = t.snapshot().version
+    t.delete("k < 30", mode="mor")
+    t.delete("k % 2 = 0", mode="mor")
+    _, n = t.update("k >= 90", {"v": "'hi'"}, mode="mor")
+    assert n == 5
+    want = [k for k in range(30, 100) if k % 2]
+    _dv_read_paths_agree(lake, spark, t, want)
+    assert t.read().filter("v = 'hi'").count() == 5
+    assert t.read(version=v0).count() == 100
+    deleted = t.diff(v0).filter("_change_type = 'delete'").count()
+    assert deleted == 100 - len(want) + 5  # the 5 updated rows moved
+
+
 def test_checkpoint_roundtrips_dv(lake, spark):
     """dv metadata survives the checkpoint write/load path (a fresh
     TransactionLog cold-starts from the checkpoint)."""
@@ -233,6 +291,29 @@ def test_pydatasource_applies_dv(lake, spark):
         .collect()
     )
     assert got == expect and len(got) == 66
+
+
+def test_pydatasource_dv_mask_across_batches(lake, spark):
+    """A file longer than one Arrow batch (64k rows): each batch's dv
+    mask is taken at the batch's own row offset in the file."""
+    from mini_lakehouse_control_plane_executor_spark.sources.pydatasource import register
+
+    register(spark)
+    lake.create_table("t", SCHEMA)
+    lake.insert("t", _df(spark, 0, 150_000).coalesce(1))
+    t = lake.table("t")
+    assert len(t.snapshot().files) == 1
+    t.delete("k % 7 = 3 OR k >= 149990", mode="mor")
+    src = (
+        spark.read.format("minilake")
+        .option("root", lake.root)
+        .option("table", "t")
+        .load()
+    )
+    agg = [F.count(F.lit(1)), F.sum("k"), F.sum(F.col("k") * F.col("k"))]
+    want = t.read().agg(*agg).collect()
+    assert src.agg(*agg).collect() == want
+    assert want[0][0] == sum(1 for k in range(149_990) if k % 7 != 3)
 
 
 def test_stream_source_rejects_dv_update(lake, spark, tmp_path):

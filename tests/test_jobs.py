@@ -7,6 +7,7 @@ import time
 from pyspark.sql import functions as F
 
 from mini_lakehouse_control_plane_executor_spark.plans.query import Aggregate, SimpleQuery
+from mini_lakehouse_control_plane_executor_spark.table import catalog as cat
 from mini_lakehouse_control_plane_executor_spark.table.schema import Field
 
 SCHEMA = [Field("k", "int64"), Field("v", "string"), Field("x", "float64")]
@@ -121,3 +122,105 @@ def test_finished_job_eviction_bounds_job_map(lake, spark, monkeypatch):
     # evicted jobs' result dirs are gone; surviving ones remain
     results_root = os.path.join(lake.root, "results")
     assert len(os.listdir(results_root)) <= 3
+
+
+ALL_TYPES = [
+    Field("i32", "int32"),
+    Field("i64", "int64"),
+    Field("f32", "float32"),
+    Field("f64", "float64"),
+    Field("s", "string"),
+    Field("b", "boolean"),
+    Field("d", "date"),
+    Field("ts", "timestamp"),
+]
+
+
+def _all_types_df(spark, n):
+    """``n`` rows over every schema type; every third row is NULL in
+    every column but the key."""
+    null = F.col("id") % 3 == 2
+    return spark.range(n).select(
+        F.col("id").cast("int").alias("i32"),
+        F.when(~null, F.col("id") * 1_000_003).alias("i64"),
+        F.when(~null, (F.col("id") / 7).cast("float")).alias("f32"),
+        F.when(~null, F.col("id") / 3).alias("f64"),
+        F.when(~null, F.concat(F.lit("é-"), F.col("id").cast("string"))).alias("s"),
+        F.when(~null, F.col("id") % 2 == 0).alias("b"),
+        F.when(~null, F.date_add(F.lit("1999-12-30").cast("date"), F.col("id").cast("int"))).alias("d"),
+        F.when(~null, F.timestamp_micros(F.col("id") * 86_400_123_457)).alias("ts"),
+    )
+
+
+def _dicts(df):
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def test_job_result_matches_collect_for_every_type(lake, spark):
+    """The Arrow read of the result sink gives what ``collect()`` gives,
+    value for value and type for type, for all eight schema types with
+    NULLs, and for an empty result."""
+    lake.create_table("ty", ALL_TYPES)
+    lake.insert("ty", _all_types_df(spark, 60))
+    for q in [
+        SimpleQuery(table_name="ty", order_by=["i32"]),
+        SimpleQuery(table_name="ty", filter="i32 > 1000"),  # empty
+        SimpleQuery(
+            table_name="ty",
+            group_by=["b"],
+            aggregates=[Aggregate("count", "*", "n"), Aggregate("max", "ts", "m")],
+        ),
+    ]:
+        want = _dicts(lake.query(q))
+        job_id = lake.submit_async(q)
+        got = lake.job_result(job_id)
+        assert got == want
+        assert [[type(v) for v in r.values()] for r in got] == [
+            [type(v) for v in r.values()] for r in want
+        ]
+        info = lake.job_status(job_id)
+        assert info.metrics["output_rows"] == len(want)
+        assert info.extra["preview"] == want[: cat.RESULT_PREVIEW_ROWS]
+
+
+def test_job_result_keeps_order_across_part_files(lake, spark, monkeypatch):
+    """An ordered result written as several part files reads back in
+    order: the preview is its first N rows, job_result all of them, and
+    output_rows is exact."""
+    monkeypatch.setattr(cat, "RESULT_PREVIEW_ROWS", 7)
+    lake.create_table("ord", SCHEMA)
+    lake.insert("ord", _df(spark, 0, 3000).repartition(4))
+    q = SimpleQuery(table_name="ord", filter="k % 5 <> 0", order_by=["v"])
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        job_id = lake.submit_async(q)
+        info = lake.job_wait(job_id)
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    parts = cat._result_parts(info.extra["result_path"])
+    assert len(parts) > 1
+    want = _dicts(lake.query(q))
+    assert [r["v"] for r in want] == sorted(r["v"] for r in want)
+    assert lake.job_result(job_id) == want
+    assert info.extra["preview"] == want[:7]
+    assert info.metrics["output_rows"] == len(want) == 2400
+
+
+def test_job_runs_one_spark_job_and_result_reads_without_spark(lake, spark):
+    """The runner's only Spark action is the result write, and
+    job_result reads the sink on the driver without any Spark job."""
+    lake.create_table("sj", SCHEMA)
+    lake.insert("sj", _df(spark, 0, 500))
+    q = SimpleQuery(table_name="sj", filter="k < 250")
+    job_id = lake.submit_async(q)
+    info = lake.job_wait(job_id)
+    sc = spark.sparkContext
+    group = f"job-result-{job_id}"
+    sc.setJobGroup(group, "job_result")
+    try:
+        rows = lake.job_result(job_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 250
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert info.metrics["spark_jobs"] == 1

@@ -101,3 +101,26 @@ def test_server_entrypoint_serves_rest(tmp_path):
     finally:
         if proc.poll() is None:
             proc.kill()
+
+
+def test_scale_cores_rejects_unpaired_core_lists():
+    """scale_cores.py prints a paired table, so it refuses an empty,
+    single-value or non-numeric SPARK_GRAFT_SCALE_CORES up front."""
+    import pytest
+
+    from scale_cores import parse_cores
+
+    assert parse_cores("32, 8") == ["32", "8"]
+    for spec in ("", "8", "8,", "8,x", "8,0"):
+        with pytest.raises(SystemExit, match="at least two positive"):
+            parse_cores(spec)
+
+
+def test_driver_memory_default_fits_the_host():
+    """Unset SPARK_GRAFT_DRIVER_MEM sizes the driver heap from physical
+    RAM (a quarter, 1-48 GiB), never above what the host has."""
+    from mini_lakehouse_control_plane_executor_spark.session import default_driver_memory
+
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / (1 << 30)
+    gib = int(default_driver_memory().rstrip("g"))
+    assert 1 <= gib <= min(48, max(1, phys_gib / 4))
