@@ -98,10 +98,17 @@ def apply_query(df: DataFrame, q: SimpleQuery) -> DataFrame:
     if q.aggregates:
         aggs = [a.to_column() for a in q.aggregates]
         if q.group_by:
-            df = df.groupBy(*q.group_by).agg(*aggs)
             # Deterministic output order by group key, as the reference
-            # sorts stringified keys (task_executor.rs:662-663).
-            df = df.orderBy(*q.group_by)
+            # sorts stringified keys (task_executor.rs:662-663), in its
+            # single REDUCE_AGG: one partition sorted locally. A global
+            # orderBy would add a range-partitioning sample job and a
+            # second exchange for a result of one row per group.
+            df = (
+                df.groupBy(*q.group_by)
+                .agg(*aggs)
+                .coalesce(1)
+                .sortWithinPartitions(*q.group_by)
+            )
         else:
             df = df.agg(*aggs)
     elif q.projection:

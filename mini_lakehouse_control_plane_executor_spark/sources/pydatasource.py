@@ -18,12 +18,16 @@ Python API. (SQL ``CREATE TABLE ... USING minilake`` is parsed and
 schema-inferred, but as of Spark 4.1 the catalog's read path hands a
 Python data source EMPTY options, so persisted-catalog tables over this
 source don't resolve — use format reads + temp views for SQL.) It also demonstrates the reference's planner
-contract in Spark-4-native form: one input partition per snapshot file
-(``query_planner.go:141-160`` fans one map task per file), resolution
-pinned at PLAN time (snapshot isolation — a concurrent commit cannot
-change what a running query sees), and min/max-stats file pruning
-applied to the reference's filter grammar (which the reference models
-but never uses — ``query_planner.go:249-255``).
+contract in Spark-4-native form: resolution pinned at PLAN time
+(snapshot isolation — a concurrent commit cannot change what a running
+query sees), and min/max-stats file pruning applied to the reference's
+filter grammar (which the reference models but never uses —
+``query_planner.go:249-255``). The reference fans one map task per
+snapshot file (``query_planner.go:141-160``); here the files are packed,
+size-balanced, into at most one input partition per usable core, since
+each Python task pays a fixed worker setup cost before it reads a byte.
+A task reads its files in turn and applies each file's own deletion
+vector.
 
 Executor-side reads return pyarrow ``RecordBatch``es (the API's
 vectorized path), so the Python worker streams Arrow, not pickled rows.
@@ -81,9 +85,9 @@ def _pa_types():
 
 
 @dataclass
-class _FilePartition(InputPartition):
-    path: str
-    dv_path: str | None = None  # deletion vector to apply, if any
+class _FilesPartition(InputPartition):
+    # (data file, deletion vector or None) pairs, read in order by one task
+    files: list[tuple[str, str | None]]
 
 
 _SOUNDEX_MAP = "01230127022455012623017202"  # A..Z; 0=vowel reset, 7=H/W skip
@@ -283,55 +287,91 @@ class _MinilakeReader(DataSourceReader):
         return filters  # none fully handled: Spark evaluates them too
 
     def partitions(self):
-        # One input partition per snapshot file — the reference's
-        # one-map-task-per-file plan (query_planner.go:141-160). The
-        # file's deletion vector (if any) rides along so each task can
-        # apply its own deleted-position set — the per-file bitmap
-        # application that scales where a join-side dv would not.
-        return [_FilePartition(f.path, f.dv_path) for f in self._files]
+        # The reference fans one map task per file
+        # (query_planner.go:141-160); here files are packed into at most
+        # one partition per usable core instead, because every Python
+        # task pays a fixed worker setup cost (README "Read path") that
+        # dwarfs a small file's scan. Each file keeps its own deletion
+        # vector, so the task still applies per-file deleted positions.
+        return _pack_files(self._files, _usable_cores())
 
-    def read(self, partition: _FilePartition):
+    def read(self, partition: _FilesPartition):
         import os
 
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         pa_types = _pa_types()
         fields = self._schema_fields
-        deleted = np.empty(0, dtype=np.int64)
-        if partition.dv_path:
-            import pyarrow.compute as pc
+        dv_tables: dict = {}  # one MoR commit's dv covers many files
+        for path, dv_path in partition.files:
+            deleted = np.empty(0, dtype=np.int64)
+            if dv_path:
+                if dv_path not in dv_tables:
+                    dv_tables[dv_path] = pq.read_table(
+                        os.path.join(self._table_dir, dv_path),
+                        columns=["src", "pos"],
+                    )
+                dvt = dv_tables[dv_path]
+                mask = pc.equal(dvt.column("src"), os.path.basename(path))
+                deleted = dvt.filter(mask).column("pos").to_numpy()
+            offset = 0
+            pf = pq.ParquetFile(os.path.join(self._table_dir, path))
+            present = [f.name for f in fields if f.name in pf.schema_arrow.names]
+            for batch in pf.iter_batches(columns=present):
+                # Columns added by schema evolution after this file was
+                # written read as NULL (parquet merge-by-name semantics).
+                arrays = [
+                    batch.column(f.name)
+                    if f.name in present
+                    else pa.nulls(batch.num_rows, type=pa_types[f.type])
+                    for f in fields
+                ]
+                out = pa.RecordBatch.from_arrays(arrays, [f.name for f in fields])
+                if deleted.size:
+                    keep = ~np.isin(
+                        np.arange(offset, offset + out.num_rows), deleted
+                    )
+                    if not keep.all():
+                        out = out.filter(pa.array(keep))
+                offset += batch.num_rows
+                yield out
 
-            dvt = pq.read_table(
-                os.path.join(self._table_dir, partition.dv_path),
-                columns=["src", "pos"],
-            )
-            mask = pc.equal(
-                dvt.column("src"), os.path.basename(partition.path)
-            )
-            deleted = dvt.filter(mask).column("pos").to_numpy()
-        offset = 0
-        pf = pq.ParquetFile(os.path.join(self._table_dir, partition.path))
-        present = [f.name for f in fields if f.name in pf.schema_arrow.names]
-        for batch in pf.iter_batches(columns=present):
-            # Columns added by schema evolution after this file was
-            # written read as NULL (parquet merge-by-name semantics).
-            arrays = [
-                batch.column(f.name)
-                if f.name in present
-                else pa.nulls(batch.num_rows, type=pa_types[f.type])
-                for f in fields
-            ]
-            out = pa.RecordBatch.from_arrays(arrays, [f.name for f in fields])
-            if deleted.size:
-                keep = ~np.isin(
-                    np.arange(offset, offset + out.num_rows), deleted
-                )
-                if not keep.all():
-                    out = out.filter(pa.array(keep))
-            offset += batch.num_rows
-            yield out
+
+def _usable_cores() -> int:
+    """Cores this process may run on. Partition planning runs in a
+    Python worker on the driver host, which cannot see the SparkContext's
+    parallelism, so the host's CPU affinity stands in for it."""
+    import os
+
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity (macOS, Windows)
+        return os.cpu_count() or 1
+
+
+def _pack_files(files: list, n_bins: int) -> list[_FilesPartition]:
+    """Size-balanced packing of snapshot files into at most ``n_bins``
+    partitions: largest file first, each into the currently lightest
+    partition (LPT greedy). Within a partition files keep snapshot
+    order. No files plans no partitions."""
+    n_bins = max(1, min(n_bins, len(files)))
+    loads = [0] * n_bins
+    members: list[list[int]] = [[] for _ in range(n_bins)]
+    order = sorted(
+        range(len(files)), key=lambda i: (-(files[i].size or files[i].rows), i)
+    )
+    for i in order:
+        b = loads.index(min(loads))
+        loads[b] += files[i].size or files[i].rows
+        members[b].append(i)
+    return [
+        _FilesPartition([(files[i].path, files[i].dv_path) for i in sorted(m)])
+        for m in members
+        if m
+    ]
 
 
 class MinilakeDataSource(DataSource):

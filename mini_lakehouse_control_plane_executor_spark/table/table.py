@@ -1135,7 +1135,10 @@ class LakehouseTable:
             live, src_col, pos_col = self._scan_files(
                 candidates, schema, with_positions=True
             )
-            matched = live.filter(pred)
+            # Cached once: the dv entries and the rewritten rows both
+            # come from the matched rows, so the candidate files are
+            # scanned (and their dvs joined) a single time.
+            matched = live.filter(pred).persist()
             out = matched.select(
                 *[
                     F.expr(assignments[f.name])
@@ -1154,25 +1157,26 @@ class LakehouseTable:
                         [out[f.name] for f in snap.schema], out
                     )
                 )
-            dv_adds, new_counts, dv_abs = self._write_dv(
-                matched.select(
-                    F.col(src_col).alias("src"), F.col(pos_col).alias("pos")
-                ),
-                candidates,
-                f"{txn_id}-a{attempt}",
-            )
-            if not new_counts:
-                return None, 0
             stage = os.path.join(self.tmp_dir, txn_id)
+            dv_abs = None
             try:
+                dv_adds, new_counts, dv_abs = self._write_dv(
+                    matched.select(
+                        F.col(src_col).alias("src"), F.col(pos_col).alias("pos")
+                    ),
+                    candidates,
+                    f"{txn_id}-a{attempt}",
+                )
+                if not new_counts:
+                    return None, 0
+                # The rewritten rows are few, so they land in ONE file:
+                # every later read opens each file.
+                out.coalesce(1).write.mode("overwrite").parquet(stage)
+                adds = self._promote_staged(stage)
+            except BaseException:
                 # A failing rewrite (e.g. a CHECK-constraint violation
                 # raised while materializing ``out``) must not leak the
                 # already-written dv parquet — nothing referenced it yet.
-                out.coalesce(max(1, len(candidates))).write.mode(
-                    "overwrite"
-                ).parquet(stage)
-                adds = self._promote_staged(stage)
-            except BaseException:
                 if dv_abs is not None:
                     try:
                         os.remove(dv_abs)
@@ -1180,6 +1184,7 @@ class LakehouseTable:
                         pass
                 raise
             finally:
+                matched.unpersist()
                 shutil.rmtree(stage, ignore_errors=True)
             try:
                 version = self.log.commit(

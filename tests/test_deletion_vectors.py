@@ -730,3 +730,37 @@ def test_concurrent_mor_updates_all_land(lake, spark):
         for k in range(i * 10 + 5, i * 10 + 10):
             assert rows[k] == (f"v{k}", k * 1.5), k
     assert sum(f.dv_rows for f in t.snapshot().files) == 25
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_mor_update_writes_one_file_and_releases_its_cache(lake, spark):
+    """A merge-on-read UPDATE over several candidate files commits exactly
+    one new data file, and leaves no cached RDD behind on the success,
+    no-match and CHECK-violation paths; the violation path also leaves
+    no dv parquet behind."""
+    lake.create_table("t", SCHEMA)
+    for lo in range(0, 100, 25):
+        lake.insert("t", _df(spark, lo, lo + 25).coalesce(1))
+    t = lake.table("t")
+    before = _persistent_rdds(spark)
+    pre = {f.path for f in t.snapshot().files}
+    assert len(pre) == 4
+    _, n = t.update("k % 5 = 0", {"x": "x + 1"}, mode="mor")
+    assert n == 20
+    new = [f for f in t.snapshot().files if f.path not in pre]
+    assert len(new) == 1 and new[0].rows == 20
+    assert _persistent_rdds(spark) == before
+    # Not prunable by stats: the no-match path scans and caches too.
+    assert t.update("k % 1000 = 999", {"x": "0.0"}, mode="mor") == (None, 0)
+    assert _persistent_rdds(spark) == before
+    t.add_constraint("xcap", "x <= 10000")
+    dvs = set(os.listdir(t.dv_dir))
+    snap = t.snapshot()
+    with pytest.raises(Exception, match="xcap"):
+        t.update("k % 2 = 0", {"x": "x + 100000"}, mode="mor")
+    assert _persistent_rdds(spark) == before
+    assert set(os.listdir(t.dv_dir)) == dvs
+    assert t.snapshot().version == snap.version

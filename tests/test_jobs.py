@@ -224,3 +224,40 @@ def test_job_runs_one_spark_job_and_result_reads_without_spark(lake, spark):
     assert len(rows) == 250
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert info.metrics["spark_jobs"] == 1
+
+
+def test_grouped_query_orders_by_group_key_without_range_partitioning(lake, spark):
+    """A grouped SimpleQuery returns rows in group-key order — more groups
+    than shuffle partitions, a NULL key and two keys — through both
+    ``query().collect()`` and ``submit_async`` → ``job_result``. The order
+    comes from one sorted reduce partition, not a global range sort."""
+    lake.create_table(
+        "grp",
+        [Field("a", "int64", True), Field("b", "string"), Field("x", "float64")],
+    )
+    lake.insert(
+        "grp",
+        spark.range(0, 2000).select(
+            F.when(F.col("id") % 31 == 0, None)
+            .otherwise(F.col("id") % 40)
+            .alias("a"),
+            F.when(F.col("id") % 2 == 0, "p").otherwise("q").alias("b"),
+            (F.col("id") * 0.5).alias("x"),
+        ).repartition(4),
+    )
+    q = SimpleQuery(
+        table_name="grp",
+        filter="x >= 10",
+        group_by=["a", "b"],
+        aggregates=[Aggregate("count", "*", "n"), Aggregate("sum", "x", "s")],
+    )
+    df = lake.query(q)
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan
+    want = _dicts(df)
+    assert len(want) > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = [(r["a"], r["b"]) for r in want]
+    assert (None, "p") in keys and (None, "q") in keys
+    assert keys == sorted(keys, key=lambda k: (k[0] is not None, k[0] or 0, k[1]))
+    assert sum(r["n"] for r in want) == 2000 - 20
+    assert lake.job_result(lake.submit_async(q)) == want

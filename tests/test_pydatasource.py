@@ -1,6 +1,7 @@
 """`minilake` Python data source (Spark 4 DataSource API): log-driven
 visibility through spark.read.format(...), snapshot isolation pinned at
-plan time, one input partition per file, stats-based file pruning."""
+plan time, files packed into at most one input partition per core,
+stats-based file pruning."""
 
 import pytest
 
@@ -398,3 +399,65 @@ def test_format_write_check_with_spark_only_function(lake, spark):
     assert t.log.latest_version() == v_before
     assert sorted(os.listdir(os.path.join(t.dir, "data"))) == files_before
     assert os.listdir(t.tmp_dir) == []
+
+
+def test_format_packs_files_into_core_partitions(lake, spark):
+    """More files than cores: the reader packs them into at most one
+    partition per usable core, and a task holding several files applies
+    each file's own deletion vector — dv'd files sharing a partition
+    with overlapping deleted positions, a file written before
+    ``add_columns`` packed with one written after it — with and without
+    stats pruning, equal to ``table.read()``."""
+    import os
+
+    from mini_lakehouse_control_plane_executor_spark.sources.pydatasource import (
+        _MinilakeReader,
+    )
+
+    cores = len(os.sched_getaffinity(0))
+    register(spark)
+    lake.create_table("pk", SCHEMA)
+    half = cores + 1
+    for i in range(half):
+        lake.insert("pk", _mk(spark, i * 10, i * 10 + 10).coalesce(1))
+    t = lake.table("pk")
+    old = {f.path for f in t.snapshot().files}
+    t.add_columns([Field("extra", "float64", True)])
+    for i in range(half, 2 * half):
+        lake.insert(
+            "pk",
+            _mk(spark, i * 10, i * 10 + 10)
+            .withColumn("extra", F.col("id") * 0.5)
+            .coalesce(1),
+        )
+    # Positions 1 and 3 go in every file (overlapping positions under one
+    # dv parquet); id % 7 = 0 deletes file-specific positions.
+    t.delete("id % 10 = 1 OR id % 10 = 3 OR id % 7 = 0", mode="mor")
+    files = t.snapshot().files
+    assert len(files) == 2 * half > cores and all(f.dv_path for f in files)
+
+    parts = _MinilakeReader({"root": lake.root, "table": "pk"}).partitions()
+    assert len(parts) <= cores
+    assert any(len(part.files) >= 2 for part in parts)
+    assert sorted(p for part in parts for p, _ in part.files) == sorted(
+        f.path for f in files
+    )
+    assert any(
+        {p in old for p, _ in part.files} == {True, False} for part in parts
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    df = _fmt(spark, lake, "pk")
+    assert df.rdd.getNumPartitions() <= cores
+    assert rows(df) == rows(t.read())
+    assert len(rows(df)) == sum(
+        1 for k in range(20 * half) if k % 10 not in (1, 3) and k % 7
+    )
+    assert df.filter(F.col("extra").isNull()).count() == len(
+        [k for k in range(10 * half) if k % 10 not in (1, 3) and k % 7]
+    )
+    pruned = _fmt(spark, lake, "pk").filter(F.col("id") < 25)
+    assert pruned.rdd.getNumPartitions() <= 3
+    assert rows(pruned) == rows(t.read().filter(F.col("id") < 25))
